@@ -23,7 +23,7 @@ import zlib
 import numpy as np
 import pandas as pd
 
-from ..operators._arrow_agg import grouped_sketch_aggregate
+from ..operators._arrow_agg import fold_blobs, grouped_sketch_aggregate
 
 __all__ = ["KLLSketch", "kll_aggregate", "kll_quantiles_of"]
 
@@ -203,13 +203,6 @@ def kll_aggregate(df, value_col: str, group_cols=(), k: int = 200,
     analysis requires that; perfectly correlated flips make errors add
     coherently.  Pass an int to force one shared seed (reproducibility
     experiments only)."""
-    def merge_blobs(blobs: list[bytes]) -> bytes:
-        sks = [KLLSketch.from_bytes(b) for b in blobs]
-        out = sks[0]
-        for s in sks[1:]:
-            out.merge(s)
-        return out.to_bytes()
-
     counter = [0]
 
     def make() -> KLLSketch:
@@ -225,9 +218,8 @@ def kll_aggregate(df, value_col: str, group_cols=(), k: int = 200,
     return grouped_sketch_aggregate(
         df, value_col, list(group_cols),
         make=make,
-        update=lambda sk, v: sk.update(v),
-        to_bytes=lambda sk: sk.to_bytes(),
-        merge_blobs=merge_blobs,
+        update=lambda sk, v, _w: sk.update(v),
+        merge_blobs=fold_blobs(KLLSketch.from_bytes),
         out_field="kll",
     )
 

@@ -2,16 +2,19 @@
 
 Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
 
-  stage 1  ``partial_digests``  — mapInPandas over the *unshuffled* scan:
+  stage 1  ``partial_digests``  — mapInArrow over the *unshuffled* scan:
            each input partition builds one digest per group key from
-           Arrow batches (NumPy-vectorized, zero per-row Python).  Output
-           is (group keys..., digest binary) — ~1 KB per (partition, key).
-           This is map-side partial aggregation: the 100 TB of raw rows
-           never shuffle; only sketches do.
+           Arrow batches (``DigestAccumulator``: NumPy-vectorized, zero
+           per-row Python).  Output is (group keys..., digest binary,
+           rows) — ~1 KB per (partition, key).  This is map-side
+           partial aggregation: the 100 TB of raw rows never shuffle;
+           only sketches do.
 
-  stage 2  ``merge_digests_df``  — groupBy(keys) over the tiny digest
-           table + applyInPandas merge (MergingDigest.add(List) semantics,
-           one concatenated merge pass per group).
+  stage 2  ``merge_digests_df``  — repartition(keys) over the tiny
+           digest table + the whole-partition mapInArrow merge kernel
+           every sketch shares (``_arrow_agg.merge_sketch_rows``), with
+           MergingDigest.add(List) semantics: one concatenated merge
+           pass per group.
 
   optional ``tree_merge`` — for extreme partition counts (10^5+ partials
            per key) an intermediate salt level bounds any single reduce
@@ -31,17 +34,16 @@ per centroid, see core.to_small_bytes).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType, DoubleType, LongType, StructField, StructType,
-)
 
 from ..core import TDigest, merge_blobs, merge_digests, try_singleton_blob
+from ._arrow_agg import (
+    key_groups, merge_sketch_rows, needs_canon, sketch_batch, sketch_schema,
+)
 
 __all__ = [
     "partial_digests",
@@ -54,52 +56,6 @@ __all__ = [
 ]
 
 DIGEST_FIELD = "digest"
-
-# Group keys are grouped in Python dicts inside the Arrow kernels, so
-# they must be canonicalized to match Spark groupBy semantics first:
-# NaN keys group together (hash(nan) is id-based on py3.10+, so two
-# NaNs decoded from different Arrow batches would otherwise never
-# merge), -0.0 groups with 0.0, and array/map-typed keys arrive as
-# unhashable lists/dicts from to_pylist.
-_NAN_KEY = object()
-
-
-def _canon_key_val(v):
-    if isinstance(v, float):
-        if v != v:
-            return _NAN_KEY
-        if v == 0.0:
-            return 0.0  # fold -0.0 into 0.0, like Spark's grouping
-        return v
-    if isinstance(v, list):
-        return tuple(_canon_key_val(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon_key_val(x)) for k, x in v.items()))
-    return v
-
-
-def _canon_key(key: tuple) -> tuple:
-    return tuple(_canon_key_val(v) for v in key)
-
-
-def _norm_orig_val(v):
-    """Normalize a RAW group-key value for output: fold -0.0 into 0.0
-    (recursively through lists/dicts) so the emitted key matches
-    Spark's normalized groupBy output deterministically — a group
-    containing both -0.0 and 0.0 must not surface whichever raw form a
-    partition saw first.  NaN passes through unchanged (the canonical
-    key already unifies NaNs; NaN itself is the correct output)."""
-    if isinstance(v, float):
-        return 0.0 if v == 0.0 else v
-    if isinstance(v, list):
-        return [_norm_orig_val(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _norm_orig_val(x) for k, x in v.items()}
-    return v
-
-
-def _norm_orig(key: tuple) -> tuple:
-    return tuple(_norm_orig_val(v) for v in key)
 
 
 def _shuffle_partitions(df: DataFrame) -> int:
@@ -117,17 +73,6 @@ def _shuffle_partitions(df: DataFrame) -> int:
 # MergingDigest.java:33-49 — bigger buffers are both faster and more
 # accurate via two-level compression).
 DEFAULT_BUFFER = 1 << 16
-
-
-def _digest_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
-    return StructType(
-        list(fields)
-        + [
-            StructField(DIGEST_FIELD, BinaryType(), False),
-            StructField("rows", LongType(), False),
-        ]
-    )
 
 
 def partial_digests(
@@ -151,7 +96,7 @@ def partial_digests(
     group_cols = list(group_cols)
     cols = group_cols + [value_col] + ([weight_col] if weight_col else [])
     narrow = df.select(*cols)  # column pruning reaches the scan
-    out_schema = _digest_schema(narrow, group_cols)
+    out_schema = sketch_schema(narrow, group_cols, DIGEST_FIELD)
     n_keys = len(group_cols)
     has_weight = weight_col is not None
 
@@ -192,11 +137,11 @@ class DigestAccumulator:
         # canon key -> first-seen original values, for emission
         self._orig: dict[tuple, tuple] = {}
         # whether any key column's type can need canonicalization
-        # (floats: NaN/-0.0 folding; nested: unhashable) — decided from
-        # the first batch's Arrow schema; string/int/timestamp keys
-        # skip the per-group canon+norm entirely
-        self._needs_canon: bool | None = None
-        self.key_schema: list = [None] * n_keys
+        # (_arrow_agg.needs_canon) — decided from the first batch's
+        # Arrow schema; string/int/timestamp keys skip the per-group
+        # canon+norm entirely
+        self._needs_canon = False
+        self.key_types: list | None = None
         # per-key deferred chunks: when a batch spans many groups the
         # per-group slices are tiny (tens of rows) and TDigest.add_batch's
         # fixed cost (contiguity/NaN/min-max/append) dominates — so
@@ -246,9 +191,6 @@ class DigestAccumulator:
         self.counts[key] += v.size
 
     def update(self, batch) -> None:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         n_keys = self.n_keys
         values = batch.column(n_keys).to_numpy(zero_copy_only=False)
         if self.has_weight:
@@ -259,13 +201,10 @@ class DigestAccumulator:
         ok = ~np.isnan(values)  # aggregate ignores NULL/NaN inputs
         if weights is not None:
             ok &= ~np.isnan(weights) & (weights > 0)
-        if self._needs_canon is None and n_keys:
-            def _can_need(t):
-                return (pa.types.is_floating(t) or pa.types.is_nested(t)
-                        or pa.types.is_decimal(t))
-            self._needs_canon = any(
-                _can_need(batch.schema.field(i).type)
-                for i in range(n_keys))
+        if self.key_types is None:
+            self.key_types = [batch.schema.field(i).type
+                              for i in range(n_keys)]
+            self._needs_canon = needs_canon(self.key_types)
 
         if n_keys == 0:
             v = values[ok] if not ok.all() else values
@@ -276,71 +215,14 @@ class DigestAccumulator:
             self.counts[()] += v.size
             return
 
-        # dictionary-encode each key column (C kernel), combine codes
-        combined = None
-        codes_list = []
-        dicts = []
-        for i in range(n_keys):
-            col = batch.column(i)
-            self.key_schema[i] = batch.schema.field(i)
-            try:
-                enc = pc.dictionary_encode(col)
-                codes = pc.fill_null(enc.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                # decode the (small) dictionary once — key tuples then
-                # come from O(1) list indexing, not per-group pyarrow
-                # scalar .as_py() (which dominated profiles at high
-                # per-batch group cardinality)
-                dict_vals = enc.dictionary.to_pylist()
-            except pa.lib.ArrowNotImplementedError:
-                # nested (array/map/struct) key columns have no Arrow
-                # dictionary kernel — encode in Python.  Cold path:
-                # it only runs for nested-typed GROUP columns, whose
-                # per-batch cardinality is small by grouping contract.
-                vals = col.to_pylist()
-                code_of: dict = {}
-                codes = np.empty(len(vals), dtype=np.int64)
-                dict_vals = []
-                for j, v in enumerate(vals):
-                    if v is None:
-                        codes[j] = -1
-                        continue
-                    ck = _canon_key_val(v)
-                    c = code_of.get(ck)
-                    if c is None:
-                        c = code_of[ck] = len(dict_vals)
-                        dict_vals.append(v)
-                    codes[j] = c
-            card = len(dict_vals) + 1
-            combined = codes + 1 if combined is None \
-                else combined * card + (codes + 1)
-            codes_list.append(codes)
-            dicts.append(dict_vals)
-        if not ok.all():
-            combined = np.where(ok, combined, -1)
-
-        order = np.argsort(combined, kind="stable")
-        sorted_codes = combined[order]
-        # group boundaries over the sorted codes
-        bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [sorted_codes.size]))
+        order, starts, ends, keys, outs = key_groups(
+            batch.columns[:n_keys], batch.num_rows, self._needs_canon, ok)
+        if self._needs_canon:
+            for key, out in zip(keys, outs):
+                self._orig.setdefault(key, out)
         sorted_values = values[order]
         sorted_weights = weights[order] if weights is not None else None
-        needs_canon = self._needs_canon
-        for s, e in zip(starts, ends):
-            if sorted_codes[s] < 0:  # filtered-out rows bucket
-                continue
-            row0 = order[s]
-            raw = tuple(
-                dicts[i][codes_list[i][row0]]
-                if codes_list[i][row0] >= 0 else None
-                for i in range(n_keys))
-            if needs_canon:
-                key = _canon_key(raw)
-                self._orig.setdefault(key, _norm_orig(raw))
-            else:
-                key = raw
+        for key, s, e in zip(keys, starts, ends):
             # .copy() so the parked chunk doesn't pin this batch's full
             # sorted array until flush time
             self._push(key, sorted_values[s:e].copy(),
@@ -348,8 +230,6 @@ class DigestAccumulator:
                        if sorted_weights is not None else None)
 
     def finish(self):
-        import pyarrow as pa
-
         # small unit-weight keys take the bit-identical singleton
         # serialization fast path (core.try_singleton_blob): in
         # high-cardinality groupings (the flagship (role, ts_hour)
@@ -375,115 +255,12 @@ class DigestAccumulator:
         if not self.acc and not fast:
             return None
         keys = list(self.acc.keys()) + list(fast.keys())
-        arrays = []
-        names = []
-        for i, c in enumerate(self.group_cols):
-            typ = self.key_schema[i].type \
-                if self.key_schema[i] is not None else None
-            arrays.append(pa.array(
-                [self._orig.get(k, k)[i] for k in keys], type=typ))
-            names.append(c)
-        arrays.append(pa.array(
+        return sketch_batch(
+            self.group_cols, self.key_types, DIGEST_FIELD,
+            [self._orig.get(k, k) for k in keys],
             [fast[k] if k in fast
              else self.acc[k].to_bytes(compress=False) for k in keys],
-            type=pa.binary()))
-        names.append(DIGEST_FIELD)
-        arrays.append(pa.array([self.counts[k] for k in keys],
-                               type=pa.int64()))
-        names.append("rows")
-        return pa.RecordBatch.from_arrays(arrays, names=names)
-
-
-def _partition_merge_gen(compression: float, scale: str,
-                         group_cols: Sequence[str]):
-    """Whole-partition stage-2 merge kernel: accumulate (key -> blobs)
-    across the partition's Arrow batches, merge each key once at the
-    end, emit one RecordBatch.  One Python round-trip per REDUCER
-    PARTITION instead of one applyInPandas call per GROUP — profiled on
-    the scaling job the per-group path cost ~10 ms/group (pandas
-    construction + Arrow conversion per group), dominating the whole
-    reduce stage at P=256 partials x K~3k keys."""
-    group_cols = list(group_cols)
-    n_keys = len(group_cols)
-
-    def gen(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)  # digest rows — tiny vs raw
-        key_fields = [tbl.schema.field(i) for i in range(n_keys)]
-        needs_canon = any(
-            pa.types.is_floating(f.type) or pa.types.is_nested(f.type)
-            or pa.types.is_decimal(f.type) for f in key_fields)
-        n = tbl.num_rows
-        bcol = tbl.column(n_keys).to_pylist()
-        rcol = tbl.column(n_keys + 1).to_numpy(zero_copy_only=False)
-        blobs: dict[tuple, list] = {}
-        rows: dict[tuple, int] = {}
-        origs: dict[tuple, tuple] = {}
-        if needs_canon:
-            # float / nested / decimal keys: per-row canonicalization
-            # (NaN folding, -0.0, unhashable lists) — the cold path
-            cols = [tbl.column(i).to_pylist() for i in range(n_keys)]
-            for j in range(n):
-                raw = tuple(c[j] for c in cols)
-                key = _canon_key(raw)
-                lst = blobs.get(key)
-                if lst is None:
-                    lst = blobs[key] = []
-                    rows[key] = 0
-                    origs[key] = _norm_orig(raw)
-                lst.append(bcol[j])
-                rows[key] += rcol[j]
-        else:
-            # vectorized grouping, same dictionary-encode + combined-
-            # code scheme as stage 1 (DigestAccumulator.update): Python
-            # touches each GROUP once, never each row
-            combined = None
-            codes_list = []
-            dicts = []
-            for i in range(n_keys):
-                enc = pc.dictionary_encode(tbl.column(i).combine_chunks())
-                codes = pc.fill_null(enc.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                dict_vals = enc.dictionary.to_pylist()
-                card = len(dict_vals) + 1
-                combined = codes + 1 if combined is None \
-                    else combined * card + (codes + 1)
-                codes_list.append(codes)
-                dicts.append(dict_vals)
-            order = np.argsort(combined, kind="stable")
-            sorted_codes = combined[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [n]))
-            for s, e in zip(starts, ends):
-                row0 = order[s]
-                key = tuple(
-                    dicts[i][codes_list[i][row0]]
-                    if codes_list[i][row0] >= 0 else None
-                    for i in range(n_keys))
-                idx = order[s:e]
-                blobs[key] = [bcol[j] for j in idx]
-                rows[key] = int(rcol[idx].sum())
-        keys = list(blobs)
-        arrays = [
-            pa.array([origs.get(k, k)[i] for k in keys],
-                     type=key_fields[i].type)
-            for i in range(n_keys)
-        ]
-        arrays.append(pa.array(
-            [merge_blobs(blobs[k], compression=compression,
-                         scale=scale).to_bytes() for k in keys],
-            type=pa.binary()))
-        arrays.append(pa.array([rows[k] for k in keys], type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=group_cols + [DIGEST_FIELD, "rows"])
-
-    return gen
+            [self.counts[k] for k in keys])
 
 
 def merge_digests_df(
@@ -495,17 +272,19 @@ def merge_digests_df(
 ) -> DataFrame:
     """Stage 2: shuffle the (tiny) digest rows by key and merge per group.
 
-    Grouped path: ``repartition(keys)`` co-locates every key's partials,
-    then a whole-partition ``mapInArrow`` kernel merges all keys of the
-    partition in ONE Python round-trip (see _partition_merge_gen).  The
-    repartition is BY COLUMN with no pinned count by default, so AQE
-    sizes the reduce stage by actual partial bytes (guide §2.2): a
-    15-row digest table collapses to ONE task instead of
-    spark.sql.shuffle.partitions near-empty Python round-trips
-    (measured 0.65 s/query saved on the sf0.1 headline bench, where the
-    pinned 64-task stage dominated the merge).  Every downstream
-    consumer of the merge output (quantile-extract UDFs, collect)
-    inherits the right-sized partitioning too.
+    Runs the shared stage-2 kernel (``_arrow_agg.merge_sketch_rows``):
+    ``repartition(keys)`` co-locates every key's partials, then a
+    whole-partition ``mapInArrow`` kernel merges all keys of the
+    partition in ONE Python round-trip.  The repartition is BY COLUMN
+    with no pinned count by default, so AQE sizes the reduce stage by
+    actual partial bytes: a 15-row digest table collapses
+    to ONE task instead of spark.sql.shuffle.partitions near-empty
+    Python round-trips (measured 0.65 s/query saved on the sf0.1
+    headline bench, where the pinned 64-task stage dominated the
+    merge).  Every downstream consumer of the merge output
+    (quantile-extract UDFs, collect) inherits the right-sized
+    partitioning too.  The global aggregate (no ``group_cols``) is one
+    row, an empty digest with ``rows = 0`` on empty input.
 
     ``pin_partitions=True`` pins the exchange at
     spark.sql.shuffle.partitions instead — for callers that KNOW the
@@ -517,42 +296,17 @@ def merge_digests_df(
     with occupancy 0.73 and task CPU inflated 22 -> 37 core-s, while
     the pinned 64-task shape — 8 balanced waves — restores tail-hiding;
     the scan+kernel stage scales 0.95 in the same windows)."""
-    group_cols = list(group_cols)
-    schema = StructType(
-        [partials.schema[c] for c in group_cols]
-        + [StructField(DIGEST_FIELD, BinaryType(), False),
-           StructField("rows", LongType(), False)]
-    )
-    if group_cols:
-        sel = partials.select(*group_cols, DIGEST_FIELD, "rows")
-        if pin_partitions:
-            rep = sel.repartition(_shuffle_partitions(partials),
-                                  *group_cols)
-        else:
-            rep = sel.repartition(*group_cols)
-        return rep.mapInArrow(
-            _partition_merge_gen(compression, scale, group_cols),
-            schema=schema)
-    # global aggregate: single group — funnel the per-partition digest rows
-    # (already tiny) into one task and merge.  repartition, NOT coalesce:
-    # coalesce(1) would collapse the whole upstream partial-build stage
-    # into a single task; repartition keeps a shuffle barrier so partials
-    # stay parallel and only ~1 KB digest rows funnel through it.
-    return partials.repartition(1).mapInPandas(
-        _global_merge_gen(compression, scale), schema=schema)
+    return merge_sketch_rows(
+        partials, group_cols, DIGEST_FIELD,
+        _digest_merge(compression, scale),
+        _shuffle_partitions(partials) if pin_partitions else None)
 
 
-def _global_merge_gen(compression: float, scale: str):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        blobs: list[bytes] = []
-        rows = 0
-        for pdf in batches:
-            blobs.extend(pdf[DIGEST_FIELD])
-            rows += int(pdf["rows"].sum())
-        merged = merge_blobs(blobs, compression=compression, scale=scale)
-        yield pd.DataFrame({DIGEST_FIELD: [merged.to_bytes()],
-                            "rows": [rows]})
-    return gen
+def _digest_merge(compression: float, scale: str):
+    def merge(blobs: list) -> bytes:
+        return merge_blobs(blobs, compression=compression,
+                           scale=scale).to_bytes()
+    return merge
 
 
 def tree_merge(
@@ -574,24 +328,15 @@ def tree_merge(
     salted = partials.withColumn(
         "__salt", F.pmod(F.crc32(F.col(DIGEST_FIELD)), F.lit(fanout))
     )
-    schema = StructType(
-        [partials.schema[c] for c in group_cols]
-        + [StructField("__salt", salted.schema["__salt"].dataType, True),
-           StructField(DIGEST_FIELD, BinaryType(), False),
-           StructField("rows", LongType(), False)]
-    )
     # intermediate level keeps 2x centroids (stratified merging: sub-digests
     # at delta' > delta are *more* accurate, docs/vldb/short.tex:185-198);
     # only the final level compresses to the public delta.  Same whole-
     # partition merge kernel as merge_digests_df: the salted level has
-    # keys x fanout groups, where per-group applyInPandas overhead would
-    # hurt the most.
-    salt_keys = group_cols + ["__salt"]
-    level1 = (salted.select(*salt_keys, DIGEST_FIELD, "rows")
-              .repartition(*salt_keys)
-              .mapInArrow(
-                  _partition_merge_gen(2 * compression, scale, salt_keys),
-                  schema=schema))
+    # keys x fanout groups, where a per-group merge call would hurt the
+    # most.
+    level1 = merge_sketch_rows(salted, group_cols + ["__salt"],
+                               DIGEST_FIELD,
+                               _digest_merge(2 * compression, scale))
     return merge_digests_df(level1.drop("__salt"), group_cols,
                             compression, scale)
 

@@ -487,7 +487,8 @@ def test_singleton_blob_bit_identical():
     """core.try_singleton_blob is byte-for-byte the full path's partial
     blob whenever it fires, and declines (None) exactly when the merge
     pass would fuse something — swept across sizes spanning the
-    eligibility threshold, plus duplicate/negative/inf values."""
+    eligibility threshold, plus duplicate/negative/inf values and a
+    mix of -0.0 and 0.0 (equal, but bit-distinct)."""
     from t_digest_spark.core import try_singleton_blob
     from t_digest_spark.operators.aggregate import DEFAULT_BUFFER
 
@@ -495,9 +496,13 @@ def test_singleton_blob_bit_identical():
     fired = declined = 0
     sizes = list(range(1, 40)) + [100, 200, 400, 800, 1600, 3200, 6400]
     for n in sizes:
+        zeros = rng.normal(size=n)
+        zeros[rng.random(n) < 0.5] = 0.0
+        zeros[rng.random(n) < 0.3] = -0.0
         for vals in (rng.gamma(2.0, 1.0, size=n),
                      np.repeat(rng.normal(size=max(1, n // 4 + 1)),
-                               4)[:n].astype(np.float64)):
+                               4)[:n].astype(np.float64),
+                     zeros):
             blob = try_singleton_blob(vals, 100.0, DEFAULT_BUFFER, "K_2")
             d = TDigest(100.0, buffer_size=DEFAULT_BUFFER, scale="K_2")
             d.add_batch(vals)
@@ -512,6 +517,25 @@ def test_singleton_blob_bit_identical():
             fired += 1
             assert blob == full, f"fast path diverged at n={n}"
     assert fired > 20 and declined > 0
+
+
+def test_singleton_memo_bounded():
+    """try_singleton_blob's memos (a probe digest per (compression,
+    buffer, scale), an eligibility flag per group size) stay bounded in
+    a long-lived worker that sees many distinct parameters."""
+    from t_digest_spark import core
+
+    rng = np.random.default_rng(5)
+    vals = rng.normal(size=20)
+    for i in range(3 * core._SINGLETON_PROBES_MAX):
+        blob = core.try_singleton_blob(vals, 50.0 + i, 1 << 10,
+                                       ("K_1", "K_2", "K_3")[i % 3])
+        assert blob is not None
+        assert len(core._SINGLETON_PROBES) <= core._SINGLETON_PROBES_MAX
+    for n in range(1, 3 * core._SINGLETON_SIZES_MAX, 2):
+        core.try_singleton_blob(rng.normal(size=n), 100.0, 1 << 16, "K_2")
+        for _probe, elig in core._SINGLETON_PROBES.values():
+            assert len(elig) <= core._SINGLETON_SIZES_MAX
 
 
 def test_singleton_blob_threshold_behavior():
