@@ -1,6 +1,6 @@
 """Recommended Spark configuration for t_digest_spark pipelines.
 
-These settings matter at any scale; two are load-bearing:
+These settings matter at any scale; three are load-bearing:
 
 - ``spark.sql.execution.arrow.maxBytesPerBatch = 2147483647`` (Int.MaxValue)
   Spark 4.x guards every Arrow batch row-append with
@@ -17,6 +17,17 @@ These settings matter at any scale; two are load-bearing:
   preloads numpy/pandas/pyarrow in the worker daemon so per-task forked
   workers inherit them copy-on-write instead of re-importing (~0.7 s per
   task in syscall-constrained sandboxes).
+
+- the same daemon's stat-validated zip directory cache (Python < 3.13):
+  each task's ``importlib.invalidate_caches()`` otherwise rereads the
+  central directory of ``pyspark.zip``, the py4j zip and the spark-core
+  jar once per cached zip importer (16 per worker), 0.14-0.54 s per task
+  before the first row on a 4-core host; with the cache a task rereads nothing unless an
+  archive changed on disk.
+
+  Both daemon items are lost on the stock-daemon fallback below
+  (``spark-submit --py-files`` with the package only in an archive):
+  those tasks still pay the re-imports and the per-task rereads.
 
 The rest are ordinary large-input hygiene: AQE on, shuffle partitions
 sized to the cluster, scan splits sized so small files still fan out.
