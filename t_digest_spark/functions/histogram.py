@@ -15,8 +15,9 @@ Semantics preserved:
   (FloatHistogram.java:139-152).
 
 Mergeability means the Spark aggregation is the same two-stage
-partial/merge scaffold as every other sketch here
-(``operators._arrow_agg.grouped_sketch_aggregate``); see
+partial/merge scaffold as every other sketch here, the t-digest
+included: one stage-1 build (``operators._arrow_agg.SketchAccumulator``)
+and one stage-2 merge, through ``grouped_sketch_aggregate``; see
 ``histogram_aggregate`` below.
 
 ``Simple64`` bitpacking (Simple64.java:49-971) is intentionally not

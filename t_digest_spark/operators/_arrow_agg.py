@@ -1,13 +1,13 @@
 """The two Arrow kernels every sketch aggregate in this library runs on
 (t-digest / count-min / Bloom / HLL / histogram / KLL):
 
-  stage 1: ``mapInArrow`` over the unshuffled scan; group keys are
-           dictionary-encoded by Arrow C kernels and rows routed to
-           per-key sketch objects via stable-sorted contiguous slices;
-           one serialized sketch row per (input partition, key).  The
-           t-digest runs its own specialized build
-           (``aggregate.DigestAccumulator``); every other sketch runs
-           ``grouped_sketch_aggregate``'s.
+  stage 1: ``sketch_partials`` — ``mapInArrow`` over the unshuffled
+           scan, one ``SketchAccumulator`` per input partition: group
+           keys are dictionary-encoded by Arrow C kernels, rows routed
+           to per-key sketches via stable-sorted contiguous slices, one
+           serialized sketch row per (input partition, key).  Every
+           sketch builds here, the t-digest included (its small keys
+           take the singleton encoder, ``core.try_singleton_blob``).
   stage 2: ``merge_sketch_rows`` — an exchange by key (one partition for
            the global case), then ``partition_merge``: a whole-partition
            ``mapInArrow`` kernel that merges every key of a reducer
@@ -20,16 +20,25 @@ nested (array/map) keys become hashable.
 
 from __future__ import annotations
 
+from operator import methodcaller
 from typing import Callable, Sequence
 
 import numpy as np
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-__all__ = ["grouped_sketch_aggregate", "merge_sketch_rows",
+__all__ = ["SketchAccumulator", "sketch_partials",
+           "grouped_sketch_aggregate", "merge_sketch_rows",
            "partition_merge", "key_groups", "needs_canon", "fold_blobs",
-           "sketch_batch", "sketch_schema"]
+           "sketch_batch", "sketch_schema", "DEFAULT_BUFFER"]
+
+# Rows parked per key before one ``update`` call: Arrow batches are
+# ~10k rows, so each key's slices from several batches are fed at once
+# (amortized buffering per MergingDigest.java:33-49 — for the t-digest
+# bigger buffers are both faster and more accurate via two-level
+# compression).
+DEFAULT_BUFFER = 1 << 16
 
 # Group keys are grouped in Python dicts inside the Arrow kernels, so
 # they must be canonicalized to match Spark groupBy semantics first:
@@ -152,10 +161,18 @@ def key_groups(cols: Sequence, n: int, canon: bool,
     touches each GROUP once, never each row.
     """
     combined = np.zeros(n, dtype=np.int64)
+    radix = 1  # combined < radix
     encs = []
     for col in cols:
         codes, keys, outs = _encode(col, canon)
-        combined = combined * (len(keys) + 1) + (codes + 1)
+        base = len(keys) + 1
+        if radix * base > 1 << 62:
+            # the packed code would overflow int64 and merge distinct
+            # keys: renumber the codes so far densely first
+            _, combined = np.unique(combined, return_inverse=True)
+            radix = int(combined.max()) + 1
+        combined = combined * base + (codes + 1)
+        radix *= base
         encs.append((codes, keys, outs))
     if ok is not None and not ok.all():
         combined = np.where(ok, combined, -1)
@@ -277,6 +294,162 @@ def fold_blobs(from_bytes: Callable[[bytes], object]):
     return merge_blobs
 
 
+class _Key:
+    """One group key's state in a ``SketchAccumulator``."""
+
+    __slots__ = ("out", "sketch", "rows", "parked", "nparked")
+
+    def __init__(self, out, sketch):
+        self.out = out  # the key values to emit
+        self.sketch = sketch
+        self.rows = 0  # values kept, folded or parked
+        self.parked: list = []  # (values, weights) slices
+        self.nparked = 0
+
+
+def _column(col, dtype, keep: np.ndarray) -> np.ndarray:
+    """``col`` as a NumPy array (cast to ``dtype`` unless None); clears
+    ``keep`` in place where the value is null or NaN."""
+    if col.null_count:
+        keep &= col.is_valid().to_numpy(zero_copy_only=False)
+        col = col.fill_null(0)
+    a = col.to_numpy(zero_copy_only=False)
+    if dtype is not None:
+        a = a.astype(dtype, copy=False)
+    if a.dtype.kind == "f":
+        keep &= ~np.isnan(a)
+    return a
+
+
+def _cat(arrays):
+    return arrays[0] if len(arrays) == 1 else np.concatenate(arrays)
+
+
+class SketchAccumulator:
+    """Stage 1 of every sketch aggregate: one input partition's Arrow
+    batches, laid out as ``(key_cols..., value[, weight])``, folded
+    into one sketch per group key and emitted as one ``sketch_batch``.
+
+    The sketch protocol: ``make()`` builds an empty sketch,
+    ``update(sketch, values, weights)`` folds in one key's values
+    (``weights`` is the weight column's slice, or None) and
+    ``to_bytes(sketch)`` serializes it.  Values arrive as
+    ``value_dtype``; a row whose value or weight is null or NaN is
+    dropped, and ``rows`` counts the values each sketch saw.  Python
+    touches each GROUP once per batch, never each row.
+
+    A key's slices are parked (copied, so they do not pin their batch)
+    and fed to ``update`` in one concatenated call once ``buffer_size``
+    rows are parked, or at ``finish``: when a batch spans many keys the
+    slices are tens of rows, where any sketch's per-call fixed cost
+    dominates.  Sketches are made in first-seen key order when the key
+    is first seen, so per-sketch state such as KLL's seeds follows the
+    input order.  The exception is a build with a small-key encoder
+    ``small(values) -> bytes | None`` (the t-digest's singleton path):
+    there a sketch is made only once its key's parked rows reach
+    ``buffer_size``, or at ``finish``, where an unweighted key that
+    never reached it is first offered to ``small``."""
+
+    def __init__(self, group_cols: Sequence[str], field: str,
+                 make: Callable[[], object],
+                 update: Callable[[object, np.ndarray, np.ndarray | None],
+                                  None],
+                 to_bytes: Callable[[object], bytes] = methodcaller(
+                     "to_bytes"),
+                 small: Callable[[np.ndarray], bytes | None] | None = None,
+                 weighted: bool = False, value_dtype=np.float64,
+                 buffer_size: int = DEFAULT_BUFFER):
+        self.group_cols = list(group_cols)
+        self.field = field
+        self.make = make
+        self.update_sketch = update
+        self.to_bytes = to_bytes
+        self.small = small
+        self.weighted = weighted
+        self.value_dtype = value_dtype
+        self.buffer_size = buffer_size
+        self.key_types: list | None = None  # from the first batch
+        self._canon = False
+        self._keys: dict[tuple, _Key] = {}  # first-seen order
+
+    def update(self, batch) -> None:
+        n_keys = len(self.group_cols)
+        if self.key_types is None:
+            self.key_types = [batch.schema.field(i).type
+                              for i in range(n_keys)]
+            self._canon = needs_canon(self.key_types)
+        keep = np.ones(batch.num_rows, dtype=bool)
+        v = _column(batch.column(n_keys), self.value_dtype, keep)
+        w = _column(batch.column(n_keys + 1), None, keep) \
+            if self.weighted else None
+        order, starts, ends, keys, outs = key_groups(
+            batch.columns[:n_keys], batch.num_rows, self._canon, keep)
+        v = v[order]
+        if w is not None:
+            w = w[order]
+        for key, out, s, e in zip(keys, outs, starts, ends):
+            st = self._keys.get(key)
+            if st is None:
+                st = self._keys[key] = _Key(
+                    out, None if self.small else self.make())
+            st.parked.append((v[s:e].copy(),
+                              None if w is None else w[s:e].copy()))
+            st.rows += e - s
+            st.nparked += e - s
+            if st.nparked >= self.buffer_size:
+                self._fold(st, *self._unpark(st))
+
+    def _unpark(self, st: _Key):
+        vs, ws = zip(*st.parked)
+        st.parked, st.nparked = [], 0
+        return _cat(vs), _cat(ws) if self.weighted else None
+
+    def _fold(self, st: _Key, v, w) -> None:
+        if st.sketch is None:
+            st.sketch = self.make()
+        self.update_sketch(st.sketch, v, w)
+
+    def finish(self):
+        """The partition's sketch rows as one RecordBatch, or None when
+        no row was kept."""
+        if not self._keys:
+            return None
+        blobs = []
+        for st in self._keys.values():
+            blob = None
+            if st.nparked:
+                v, w = self._unpark(st)
+                if st.sketch is None and w is None:
+                    blob = self.small(v)
+                if blob is None:
+                    self._fold(st, v, w)
+            blobs.append(blob or self.to_bytes(st.sketch))
+        keys = self._keys.values()
+        return sketch_batch(self.group_cols, self.key_types, self.field,
+                            [st.out for st in keys], blobs,
+                            [st.rows for st in keys])
+
+
+def sketch_partials(narrow: DataFrame, group_cols: Sequence[str],
+                    field: str, **protocol) -> DataFrame:
+    """Stage 1: ``narrow`` (``group_cols..., value[, weight]``) through
+    one ``SketchAccumulator(group_cols, field, **protocol)`` per input
+    partition — at most (#partitions x #keys) sketch rows, no raw-row
+    shuffle."""
+    group_cols = list(group_cols)
+
+    def build(batches):
+        acc = SketchAccumulator(group_cols, field, **protocol)
+        for batch in batches:
+            acc.update(batch)
+        out = acc.finish()
+        if out is not None:
+            yield out
+
+    return narrow.mapInArrow(
+        build, schema=sketch_schema(narrow, group_cols, field))
+
+
 def grouped_sketch_aggregate(
     df: DataFrame,
     value_col: str,
@@ -291,55 +464,16 @@ def grouped_sketch_aggregate(
     """Two-stage aggregate of ``value_col`` into one sketch per group:
     ``group_cols..., out_field binary, rows long``.
 
-    The sketch protocol: ``make()`` builds an empty sketch,
-    ``update(sketch, values, weights)`` folds in one key's slice of a
-    batch (``weights`` is the int64 ``weight_col`` slice, or None),
-    ``sketch.to_bytes()`` serializes it and ``merge_blobs(blobs)``
-    merges serialized sketches.  Values arrive as ``value_dtype``
-    (int64 for pre-hashed items); null values, and NaN for float
-    values, are dropped.  ``rows`` counts the values each sketch saw.
-    The global aggregate (no group columns) returns one row even on
-    empty input: an empty sketch with ``rows = 0``."""
+    ``make``, ``update`` and ``value_dtype`` are ``SketchAccumulator``'s
+    sketch protocol (``weights`` is the ``weight_col`` slice, or None);
+    ``merge_blobs(blobs)`` merges serialized sketches.  The global
+    aggregate (no group columns) returns one row even on empty input:
+    an empty sketch with ``rows = 0``."""
     group_cols = list(group_cols)
-    n_keys = len(group_cols)
     cols = group_cols + [value_col] + ([weight_col] if weight_col else [])
-    narrow = df.where(F.col(value_col).isNotNull()).select(*cols)
-
-    def build(batches):
-        acc: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        outs: dict[tuple, tuple] = {}
-        types = canon = None
-        for batch in batches:
-            if types is None:
-                types = [batch.schema.field(i).type for i in range(n_keys)]
-                canon = needs_canon(types)
-            v = batch.column(n_keys).to_numpy(zero_copy_only=False) \
-                .astype(value_dtype, copy=False)
-            w = batch.column(n_keys + 1).to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False) if weight_col else None
-            order, starts, ends, keys, kouts = key_groups(
-                batch.columns[:n_keys], batch.num_rows, canon,
-                ~np.isnan(v) if v.dtype.kind == "f" else None)
-            v = v[order]
-            if w is not None:
-                w = w[order]
-            for key, out, s, e in zip(keys, kouts, starts, ends):
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = make()
-                    counts[key] = 0
-                    outs[key] = out
-                update(sk, v[s:e], w[s:e] if w is not None else None)
-                counts[key] += e - s
-        if acc:
-            yield sketch_batch(group_cols, types, out_field,
-                               list(outs.values()),
-                               [sk.to_bytes() for sk in acc.values()],
-                               list(counts.values()))
-
-    partials = narrow.mapInArrow(
-        build, schema=sketch_schema(narrow, group_cols, out_field))
+    partials = sketch_partials(
+        df.select(*cols), group_cols, out_field, make=make, update=update,
+        weighted=weight_col is not None, value_dtype=value_dtype)
 
     def merge(blobs: list) -> bytes:
         return merge_blobs(blobs) if blobs else make().to_bytes()

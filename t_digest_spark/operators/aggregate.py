@@ -4,11 +4,12 @@ Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
 
   stage 1  ``partial_digests``  — mapInArrow over the *unshuffled* scan:
            each input partition builds one digest per group key from
-           Arrow batches (``DigestAccumulator``: NumPy-vectorized, zero
-           per-row Python).  Output is (group keys..., digest binary,
-           rows) — ~1 KB per (partition, key).  This is map-side
-           partial aggregation: the 100 TB of raw rows never shuffle;
-           only sketches do.
+           Arrow batches on the build every sketch shares
+           (``_arrow_agg.SketchAccumulator`` with ``digest_protocol``:
+           NumPy-vectorized, zero per-row Python).  Output is (group
+           keys..., digest binary, rows) — ~1 KB per (partition, key).
+           This is map-side partial aggregation: the 100 TB of raw rows
+           never shuffle; only sketches do.
 
   stage 2  ``merge_digests_df``  — repartition(keys) over the tiny
            digest table + the whole-partition mapInArrow merge kernel
@@ -36,14 +37,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import TDigest, merge_blobs, merge_digests, try_singleton_blob
-from ._arrow_agg import (
-    key_groups, merge_sketch_rows, needs_canon, sketch_batch, sketch_schema,
-)
+from ._arrow_agg import DEFAULT_BUFFER, merge_sketch_rows, sketch_partials
 
 __all__ = [
     "partial_digests",
@@ -51,7 +48,7 @@ __all__ = [
     "tree_merge",
     "tdigest_aggregate",
     "tdigest_collect",
-    "DigestAccumulator",
+    "digest_protocol",
     "DIGEST_FIELD",
 ]
 
@@ -67,12 +64,6 @@ def _shuffle_partitions(df: DataFrame) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
-
-# Arrow batches are ~10k rows; we let each per-key digest buffer several
-# batches before a merge pass (amortized buffering per
-# MergingDigest.java:33-49 — bigger buffers are both faster and more
-# accurate via two-level compression).
-DEFAULT_BUFFER = 1 << 16
 
 
 def partial_digests(
@@ -91,176 +82,41 @@ def partial_digests(
 
     Implemented over ``mapInArrow`` — values reach NumPy zero-copy-ish
     and group keys are dictionary-encoded by Arrow C kernels, so there
-    is no pandas conversion and no per-row Python anywhere.
+    is no pandas conversion and no per-row Python anywhere.  Rows with
+    a null or NaN value, or a weight that is not positive, are ignored.
     """
     group_cols = list(group_cols)
     cols = group_cols + [value_col] + ([weight_col] if weight_col else [])
     narrow = df.select(*cols)  # column pruning reaches the scan
-    out_schema = sketch_schema(narrow, group_cols, DIGEST_FIELD)
-    n_keys = len(group_cols)
-    has_weight = weight_col is not None
-
-    def build(batches):
-        acc = DigestAccumulator(n_keys, group_cols, compression, scale,
-                                buffer_size, has_weight)
-        for batch in batches:
-            acc.update(batch)
-        out = acc.finish()
-        if out is not None:
-            yield out
-
-    return narrow.mapInArrow(build, schema=out_schema)
+    if weight_col:
+        narrow = narrow.where(F.col(weight_col) > 0)
+    return sketch_partials(narrow, group_cols, DIGEST_FIELD,
+                           weighted=weight_col is not None,
+                           **digest_protocol(compression, scale,
+                                             buffer_size))
 
 
-class DigestAccumulator:
-    """Per-partition digest accumulation over Arrow batches laid out as
-    (key_cols..., value[, weight]).
-
-    The stage-1 kernel shared by ``partial_digests`` and fused
-    operators (e.g. ``sources.tables.latency_digests_clustered``, which
-    derives its metric batch in the same Python pass): group keys are
-    dictionary-encoded by Arrow C kernels, values reach NumPy
-    zero-copy-ish, Python touches each *group* once per batch, never
-    each row."""
-
-    def __init__(self, n_keys: int, group_cols: Sequence[str],
-                 compression: float, scale: str, buffer_size: int,
-                 has_weight: bool = False):
-        self.n_keys = n_keys
-        self.group_cols = list(group_cols)
-        self.compression = compression
-        self.scale = scale
-        self.buffer_size = buffer_size
-        self.has_weight = has_weight
-        self.acc: dict[tuple, TDigest] = {}
-        self.counts: dict[tuple, int] = {}
-        # canon key -> first-seen original values, for emission
-        self._orig: dict[tuple, tuple] = {}
-        # whether any key column's type can need canonicalization
-        # (_arrow_agg.needs_canon) — decided from the first batch's
-        # Arrow schema; string/int/timestamp keys skip the per-group
-        # canon+norm entirely
-        self._needs_canon = False
-        self.key_types: list | None = None
-        # per-key deferred chunks: when a batch spans many groups the
-        # per-group slices are tiny (tens of rows) and TDigest.add_batch's
-        # fixed cost (contiguity/NaN/min-max/append) dominates — so
-        # slices are parked here (views, zero copy) and fed to the
-        # digest in one concatenated call per ~buffer_size rows
-        self._chunks: dict[tuple, list] = {}
-        self._wchunks: dict[tuple, list] = {}
-        self._chunk_rows: dict[tuple, int] = {}
-
-    def _digest(self, key: tuple) -> TDigest:
-        d = self.acc.get(key)
-        if d is None:
-            d = TDigest(self.compression, buffer_size=self.buffer_size,
-                        scale=self.scale)
-            self.acc[key] = d
-            self.counts[key] = 0
-        return d
-
-    def _push(self, key: tuple, values, weights) -> None:
-        lst = self._chunks.get(key)
-        if lst is None:
-            lst = self._chunks[key] = []
-            self._chunk_rows[key] = 0
-            if self.has_weight:
-                self._wchunks[key] = []
-        lst.append(values)
-        if weights is not None:
-            self._wchunks[key].append(weights)
-        n = self._chunk_rows[key] + values.size
-        self._chunk_rows[key] = n
-        if n >= self.buffer_size:
-            self._flush_key(key)
-
-    def _flush_key(self, key: tuple) -> None:
-        lst = self._chunks.pop(key, None)
-        if not lst:
-            return
-        v = lst[0] if len(lst) == 1 else np.concatenate(lst)
-        if self.has_weight:
-            wl = self._wchunks.pop(key)
-            w = wl[0] if len(wl) == 1 else np.concatenate(wl)
-        else:
-            w = None
-        self._chunk_rows.pop(key, None)
-        d = self._digest(key)
-        d.add_batch(v, w)
-        self.counts[key] += v.size
-
-    def update(self, batch) -> None:
-        n_keys = self.n_keys
-        values = batch.column(n_keys).to_numpy(zero_copy_only=False)
-        if self.has_weight:
-            weights = batch.column(n_keys + 1).to_numpy(
-                zero_copy_only=False)
-        else:
-            weights = None
-        ok = ~np.isnan(values)  # aggregate ignores NULL/NaN inputs
-        if weights is not None:
-            ok &= ~np.isnan(weights) & (weights > 0)
-        if self.key_types is None:
-            self.key_types = [batch.schema.field(i).type
-                              for i in range(n_keys)]
-            self._needs_canon = needs_canon(self.key_types)
-
-        if n_keys == 0:
-            v = values[ok] if not ok.all() else values
-            if v.size == 0:
-                return
-            d = self._digest(())
-            d.add_batch(v, weights[ok] if weights is not None else None)
-            self.counts[()] += v.size
-            return
-
-        order, starts, ends, keys, outs = key_groups(
-            batch.columns[:n_keys], batch.num_rows, self._needs_canon, ok)
-        if self._needs_canon:
-            for key, out in zip(keys, outs):
-                self._orig.setdefault(key, out)
-        sorted_values = values[order]
-        sorted_weights = weights[order] if weights is not None else None
-        for key, s, e in zip(keys, starts, ends):
-            # .copy() so the parked chunk doesn't pin this batch's full
-            # sorted array until flush time
-            self._push(key, sorted_values[s:e].copy(),
-                       sorted_weights[s:e].copy()
-                       if sorted_weights is not None else None)
-
-    def finish(self):
-        # small unit-weight keys take the bit-identical singleton
-        # serialization fast path (core.try_singleton_blob): in
-        # high-cardinality groupings (the flagship (role, ts_hour)
-        # shape: thousands of keys x ~tens of rows each per partition)
-        # the per-key digest construction + merge pass was the dominant
-        # finalize cost (~55 us/key vs ~3 us packed) while provably
-        # producing the same bytes.  Keys with a live digest (already
-        # flushed once) or explicit weights use the full path.
-        fast: dict[tuple, bytes] = {}
-        for key in list(self._chunks):
-            blob = None
-            if not self.has_weight and key not in self.acc:
-                lst = self._chunks[key]
-                v = lst[0] if len(lst) == 1 else np.concatenate(lst)
-                blob = try_singleton_blob(v, self.compression,
-                                          self.buffer_size, self.scale)
-            if blob is None:
-                self._flush_key(key)
-                continue
-            fast[key] = blob
-            self.counts[key] = self._chunk_rows.pop(key)
-            del self._chunks[key]
-        if not self.acc and not fast:
-            return None
-        keys = list(self.acc.keys()) + list(fast.keys())
-        return sketch_batch(
-            self.group_cols, self.key_types, DIGEST_FIELD,
-            [self._orig.get(k, k) for k in keys],
-            [fast[k] if k in fast
-             else self.acc[k].to_bytes(compress=False) for k in keys],
-            [self.counts[k] for k in keys])
+def digest_protocol(compression: float = 100.0, scale: str = "K_2",
+                    buffer_size: int = DEFAULT_BUFFER) -> dict:
+    """The digest's ``SketchAccumulator`` protocol, for
+    ``partial_digests`` and fused operators (e.g.
+    ``sources.tables.latency_digests_clustered``, which derives its
+    metric batch in the same Python pass).  Partials serialize at the
+    working compression; small unit-weight keys take the bit-identical
+    singleton encoder (``core.try_singleton_blob``): in
+    high-cardinality groupings (the flagship (role, ts_hour) shape:
+    thousands of keys x ~tens of rows each per partition) the per-key
+    digest construction + merge pass was the dominant finalize cost
+    (~55 us/key vs ~3 us packed) while provably producing the same
+    bytes."""
+    return dict(
+        make=lambda: TDigest(compression, buffer_size=buffer_size,
+                             scale=scale),
+        update=lambda d, v, w: d.add_batch(v, w),
+        to_bytes=lambda d: d.to_bytes(compress=False),
+        small=lambda v: try_singleton_blob(v, compression, buffer_size,
+                                           scale),
+        buffer_size=buffer_size)
 
 
 def merge_digests_df(

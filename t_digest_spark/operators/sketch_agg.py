@@ -8,9 +8,11 @@ Spark-first split of work:
 - merge stages move only sketch blobs (KBs), never rows.
 
 Runs on the scaffold every sketch shares
-(``_arrow_agg.grouped_sketch_aggregate``): a mapInArrow build per input
-partition, then the whole-partition mapInArrow merge, so skew in the
-hashed column is irrelevant to stage 1.
+(``_arrow_agg.grouped_sketch_aggregate``): the one stage-1 build
+(``SketchAccumulator``, one per input partition, the same build the
+t-digest uses), then the whole-partition mapInArrow merge, so skew in
+the hashed column is irrelevant to stage 1.  A row whose count-min
+weight is null is dropped.
 """
 
 from __future__ import annotations

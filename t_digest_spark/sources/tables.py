@@ -331,8 +331,9 @@ def turn_digests_clustered(transcripts: DataFrame,
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from ..operators._arrow_agg import SketchAccumulator
     from ..operators.aggregate import (
-        DEFAULT_BUFFER, DIGEST_FIELD, DigestAccumulator, merge_digests_df,
+        DEFAULT_BUFFER, DIGEST_FIELD, digest_protocol, merge_digests_df,
     )
     from pyspark.sql.types import BinaryType, LongType, StringType
 
@@ -365,9 +366,9 @@ def turn_digests_clustered(transcripts: DataFrame,
            StructField("rows", LongType(), False)])
 
     def fused(batches):
-        accs = {m: DigestAccumulator(len(group_cols), group_cols,
-                                     compression, scale, buffer_size,
-                                     has_weight=False)
+        accs = {m: SketchAccumulator(
+                    group_cols, DIGEST_FIELD,
+                    **digest_protocol(compression, scale, buffer_size))
                 for m in metrics}
         for b, lat in _clustered_lag(batches):
             names = b.schema.names

@@ -1,7 +1,7 @@
 """The shared sketch scaffold (operators/_arrow_agg.py): one stage-1
-build and one whole-partition stage-2 merge for KLL, HLL, count-min,
-Bloom and histograms, differentially checked against Spark's own
-groupBy and a single-node NumPy fold of the same rows."""
+build and one whole-partition stage-2 merge for the t-digest, KLL, HLL,
+count-min, Bloom and histograms, differentially checked against Spark's
+own groupBy and a single-node NumPy fold of the same rows."""
 
 import math
 
@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from t_digest_spark.core import TDigest, try_singleton_blob
 from t_digest_spark.functions.histogram import (
     FloatHistogram, histogram_aggregate,
 )
@@ -18,23 +19,30 @@ from t_digest_spark.functions.kll import KLLSketch, kll_aggregate
 from t_digest_spark.functions.sketches import (
     BloomFilter, CountMinSketch, HyperLogLog,
 )
-from t_digest_spark.operators._arrow_agg import partition_merge
+from t_digest_spark.operators._arrow_agg import (
+    SketchAccumulator, key_groups, partition_merge,
+)
 from t_digest_spark.operators.aggregate import (
-    DigestAccumulator, tdigest_aggregate,
+    DEFAULT_BUFFER, DIGEST_FIELD, digest_protocol, partial_digests,
+    tdigest_aggregate,
 )
 from t_digest_spark.operators.sketch_agg import sketch_aggregate
+from t_digest_spark.scale import get_scale
 
 from conftest import dist_cdf
 
 KLL_K = 64
 KLL_EPS = 3.0 / KLL_K
 HIST = dict(kind="float", min_=1e-2, max_=1e3, bins_per_decade=20)
+DIGEST_QS = (0.5, 0.99)
 KEYS = [float("nan"), -0.0, 0.0, None, 1.5, -2.0, 1e300]
 
 
 def _kinds():
     """name -> (aggregate(df, group_cols), blob column, empty sketch)."""
     return {
+        "digest": (lambda df, g: tdigest_aggregate(df, "v", g), DIGEST_FIELD,
+                   TDigest(100.0)),
         "kll": (lambda df, g: kll_aggregate(df, "v", g, k=KLL_K), "kll",
                 KLLSketch(KLL_K)),
         "hll": (lambda df, g: sketch_aggregate(df, "item", "hll", g, p=8),
@@ -77,6 +85,9 @@ def rows():
             v = float("nan")
         item = None if rng.random() < 0.05 else int(rng.integers(400))
         out.append((k, v, item, int(rng.integers(1, 5))))
+    # one null weight: count-min must drop that row, not add INT64_MIN
+    i = next(i for i, r in enumerate(out) if r[2] is not None)
+    out[i] = out[i][:3] + (None,)
     return out
 
 
@@ -89,6 +100,21 @@ def small_batches(spark):
     spark.conf.set(key, old)
 
 
+def _digest_rank_err(vals, d):
+    """Worst |q - rank(quantile(q))| over DIGEST_QS, as a fraction of the
+    K_2 size bound at q (compression 100) plus one order statistic;
+    rank(x) is the interval [#(< x), #(<= x)] / n."""
+    n = vals.size
+    qs = np.asarray(DIGEST_QS)
+    sc = get_scale("K_2")
+    bound = sc.max_size(qs, sc.normalizer(100.0, n)) + 1.0 / n
+    xs = np.array([d.quantile(q) for q in qs])
+    lo = np.searchsorted(vals, xs, side="left") / n
+    hi = np.searchsorted(vals, xs, side="right") / n
+    return float((np.maximum(0.0, np.maximum(lo - qs, qs - hi))
+                  / bound).max())
+
+
 def _fold(kind, empty, rows_of_key, hashes):
     """Single-node fold of one key's rows -> (sketch bytes, rows)."""
     if kind == "histogram":
@@ -98,7 +124,8 @@ def _fold(kind, empty, rows_of_key, hashes):
                            HIST["bins_per_decade"])
         h.add(vals)
         return h.to_bytes(), vals.size
-    kept = [(hashes[it], w) for _, _, it, w in rows_of_key if it is not None]
+    kept = [(hashes[it], w) for _, _, it, w in rows_of_key
+            if it is not None and (kind != "cm" or w is not None)]
     h = np.array([x for x, _ in kept], dtype=np.int64)
     sk = type(empty).from_bytes(empty.to_bytes())
     if kind == "cm":
@@ -129,10 +156,16 @@ def test_scaffold_matches_groupby_and_fold(spark, rows, small_batches,
         assert len(got) == len(out), kind  # one row per Spark key
         assert set(got) == spark_keys, kind
         for key, r in got.items():
-            if kind == "kll":
+            if kind in ("digest", "kll"):
                 vals = np.sort([v for _, v, _, _ in by_key[key]
                                 if v is not None and not math.isnan(v)])
                 assert r.rows == vals.size
+            if kind == "digest":
+                d = TDigest.from_bytes(bytes(r[field]))
+                assert d.size == vals.size
+                assert _digest_rank_err(vals, d) <= 1.0, key
+                continue
+            if kind == "kll":
                 sk = KLLSketch.from_bytes(bytes(r[field]))
                 assert sk.n == vals.size
                 for q in (0.1, 0.5, 0.9):
@@ -152,8 +185,6 @@ def test_global_empty_input_one_row(spark):
         assert len(out) == 1, kind
         assert out[0].rows == 0
         assert bytes(out[0][field]) == empty.to_bytes(), kind
-    out = tdigest_aggregate(df, "v").collect()
-    assert len(out) == 1 and out[0].rows == 0
 
 
 def test_global_aggregate_folds_every_partition(spark, rows):
@@ -203,9 +234,10 @@ def test_merge_kernel_dictionary_float_keys():
 
 
 def test_digest_build_dictionary_float_keys():
-    """DigestAccumulator.update canonicalizes dictionary-encoded double
+    """The digest's stage-1 build canonicalizes dictionary-encoded double
     keys the same way (stage 1 emits one row per Spark key)."""
-    acc = DigestAccumulator(1, ["k"], 100.0, "K_2", 1 << 16)
+    acc = SketchAccumulator(["k"], DIGEST_FIELD,
+                            **digest_protocol(100.0, "K_2", 1 << 16))
     t = pa.dictionary(pa.int32(), pa.float64())
     for keys in ([float("nan"), -0.0, 0.0, 1.0], [0.0, float("nan"), -0.0]):
         acc.update(pa.RecordBatch.from_arrays(
@@ -217,3 +249,79 @@ def test_digest_build_dictionary_float_keys():
                    out.column(2).to_pylist()))
     assert out.num_rows == 3
     assert got == {"nan": 2, 0.0: 4, 1.0: 1}
+
+
+def test_digest_build_bytes_equal_full_path():
+    """Through the shared build, every digest partial is byte-for-byte
+    ``TDigest(...).add_batch(v); to_bytes(compress=False)`` of its key's
+    kept values: small keys (singleton encoder), a key the singleton
+    encoder declines, and a key whose rows pass the buffer."""
+    buf = 1 << 10
+    rng = np.random.default_rng(7)
+    sizes = {0: 5, 1: 40, 2: 110, 3: 600, 4: 3 * buf}
+    keys = np.concatenate([np.full(n, k) for k, n in sizes.items()])
+    rng.shuffle(keys)
+    vals = rng.normal(size=keys.size)
+    vals[rng.random(keys.size) < 0.1] = 0.0
+    vals[rng.random(keys.size) < 0.1] = -0.0
+    vals[rng.random(keys.size) < 0.05] = np.nan
+    acc = SketchAccumulator(["k"], DIGEST_FIELD,
+                            **digest_protocol(100.0, "K_2", buf))
+    for i in range(0, keys.size, 97):
+        acc.update(pa.RecordBatch.from_arrays(
+            [pa.array(keys[i:i + 97]), pa.array(vals[i:i + 97])],
+            names=["k", "v"]))
+    out = acc.finish()
+    got = dict(zip(out.column(0).to_pylist(), zip(
+        out.column(1).to_pylist(), out.column(2).to_pylist())))
+    assert sorted(got) == sorted(sizes)
+    singleton = 0
+    for k in sizes:
+        v = vals[(keys == k) & ~np.isnan(vals)]
+        d = TDigest(100.0, buffer_size=buf, scale="K_2")
+        d.add_batch(v)
+        assert got[k] == (d.to_bytes(compress=False), v.size), k
+        singleton += try_singleton_blob(v, 100.0, buf, "K_2") is not None
+    assert 0 < singleton < len(sizes)
+
+
+def test_key_groups_wide_int_keys_do_not_collide():
+    """Four int64 key columns of 60,000 distinct values each: the packed
+    per-column codes pass 2^63, and every row must stay its own group."""
+    rng = np.random.default_rng(0)
+    n = 60_000
+    cols = [rng.permutation(n) for _ in range(4)]
+    order, starts, ends, keys, _ = key_groups(
+        [pa.array(c) for c in cols], n, False)
+    assert len(keys) == n
+    assert ends == [s + 1 for s in starts]
+    assert keys == [tuple(int(c[j]) for c in cols) for j in order[starts]]
+
+
+def test_weighted_digest_drops_bad_weights(spark, small_batches):
+    """Rows whose weight is null, NaN, 0 or negative are dropped from the
+    weighted digest; the rest fold as a single-node weighted digest."""
+    rng = np.random.default_rng(13)
+    bad = [None, float("nan"), 0.0, -1.5]
+    data = []
+    for i in range(400):
+        w = bad[i % 4] if i % 5 == 0 else float(rng.integers(1, 5))
+        data.append((i % 3, float(rng.gamma(2.0, 3.0)), w))
+    df = spark.createDataFrame(data, "k long, v double, w double") \
+        .coalesce(1)
+    got = {r.k: r for r in partial_digests(
+        df, "v", ["k"], weight_col="w").collect()}
+    merged = {r.k: r for r in tdigest_aggregate(
+        df.repartition(4), "v", ["k"], weight_col="w").collect()}
+    assert sorted(got) == sorted(merged) == [0, 1, 2]
+    for k in range(3):
+        kept = [(v, w) for kk, v, w in data
+                if kk == k and w is not None and w > 0]
+        assert 0 < len(kept) < sum(kk == k for kk, _, _ in data)
+        v, w = (np.array(x) for x in zip(*kept))
+        d = TDigest(100.0, buffer_size=DEFAULT_BUFFER, scale="K_2")
+        d.add_batch(v, w)
+        assert got[k].rows == merged[k].rows == v.size
+        assert bytes(got[k].digest) == d.to_bytes(compress=False)
+        assert TDigest.from_bytes(bytes(merged[k].digest)).size \
+            == w.sum()
